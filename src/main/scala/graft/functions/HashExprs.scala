@@ -2,11 +2,12 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Generator, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, TypeUtils}
 import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.types.{ArrayType, BinaryType, BooleanType, DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, BooleanType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 
 /** Native Catalyst expressions for the hash-heavy LLM-data operators.
   *
@@ -410,6 +411,39 @@ case class BoundedIntersectSize(left: Expression, right: Expression, num: Int, d
     copy(left = newLeft, right = newRight)
 }
 
+/** Generator: array<struct<n: int, pos: int, id>> of the docs sharing
+  * one PPJoin prefix token -> one (id_a, id_b) row, id_a < id_b, per
+  * member pair that passes the length and positional filters at this
+  * token (see [[HashRuntime.prefixPairs]]). Streaming: a hot token holds
+  * its k members, never its k² pairs. Any orderable id type.
+  */
+case class PrefixPairs(child: Expression, num: Int, den: Int)
+    extends UnaryExpression with Generator with CodegenFallback {
+  require(num > 0 && den > 0 && num <= den, s"threshold num/den must be in (0,1], got $num/$den")
+  private def idType: DataType = child.dataType.asInstanceOf[ArrayType]
+    .elementType.asInstanceOf[StructType].fields(2).dataType
+  @transient private lazy val ids = TypeUtils.getInterpretedOrdering(idType)
+  override def elementSchema: StructType =
+    new StructType().add("id_a", idType, nullable = false).add("id_b", idType, nullable = false)
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StructType(Array(StructField(_, IntegerType, _, _),
+        StructField(_, IntegerType, _, _), StructField(_, t, _, _))), _)
+        if TypeUtils.checkForOrderingExpr(t, prettyName).isSuccess =>
+      TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"prefix pairs need array<struct<int, int, orderable id>>, got $t")
+  }
+
+  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+    val members = child.eval(input)
+    if (members == null) Iterator.empty
+    else HashRuntime.prefixPairs(members.asInstanceOf[ArrayData], idType, ids, num, den)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): PrefixPairs =
+    copy(child = newChild)
+}
+
 /** (array<string>, array<string>) -> long: set-intersection size bounded
   * by the CONTAINMENT threshold num/den of the LEFT (contained) side's
   * size — the asymmetric twin of [[BoundedIntersectSize]], for
@@ -534,6 +568,8 @@ object HashExprs {
   def boundedIntersectSize(a: Column, b: Column, num: Int, den: Int): Column =
     GraftColumnBridge.column(BoundedIntersectSize(
       GraftColumnBridge.expression(a), GraftColumnBridge.expression(b), num, den))
+  def prefixPairs(members: Column, num: Int, den: Int): Column =
+    GraftColumnBridge.column(PrefixPairs(GraftColumnBridge.expression(members), num, den))
   def boundedContainSize(contained: Column, container: Column, num: Int, den: Int): Column =
     GraftColumnBridge.column(BoundedContainSize(
       GraftColumnBridge.expression(contained), GraftColumnBridge.expression(container), num, den))

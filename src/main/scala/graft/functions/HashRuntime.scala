@@ -1,6 +1,8 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.DataType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Static runtime kernels for the native expressions.
@@ -377,6 +379,34 @@ object HashRuntime {
       i += 1
     }
     c
+  }
+
+  /** Candidate pairs of one PPJoin prefix-token group: `members` holds
+    * (n, pos, id) structs — set size, 1-based canonical position of the
+    * token, doc id (of type `idType`, compared by `ids`; null ids pair
+    * with nothing). Members are ordered by n, so for each member the
+    * LENGTH filter (n_b*num <= n_a*den, the other half holds by the
+    * order) ends its scan at the first member too long to match; the
+    * POSITIONAL filter (1 + min(n_a-pa, n_b-pb))*(num+den) >=
+    * (n_a+n_b)*num is tested per pair. Rows (lower id, higher id) are
+    * produced lazily: memory is O(k) for k members, whatever the number
+    * of pairs.
+    */
+  def prefixPairs(members: ArrayData, idType: DataType, ids: Ordering[Any],
+      num: Int, den: Int): Iterator[InternalRow] = {
+    val ms = (0 until members.numElements()).map(members.getStruct(_, 3))
+      .filterNot(_.isNullAt(2)).sortBy(_.getInt(0))
+    val ns = ms.map(_.getInt(0)).toArray
+    val ps = ms.map(_.getInt(1)).toArray
+    val id = ms.map(_.get(2, idType)).toArray
+    val k = ns.length
+    Iterator.range(0, k).flatMap { a =>
+      Iterator.range(a + 1, k)
+        .takeWhile(b => ns(b).toLong * num <= ns(a).toLong * den)
+        .filter(b => ids.compare(id(a), id(b)) != 0 &&
+          (1L + math.min(ns(a) - ps(a), ns(b) - ps(b))) * (num + den) >= (ns(a).toLong + ns(b)) * num)
+        .map(b => if (ids.lt(id(a), id(b))) InternalRow(id(a), id(b)) else InternalRow(id(b), id(a)))
+    }
   }
 
   /** DISTINCT-set intersection size of two string arrays, bounded by the

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Distributed connected components over an undirected edge list — the
@@ -44,10 +45,11 @@ object Components {
     * of magnitude smaller than its corpus (ids only, verified pairs
     * only; the sf0.1 gate corpus yields 256 pairs), and at that size the
     * loop's fixed cost (per-round checkpoint + convergence-count jobs)
-    * dwarfs the work. The guard is SIZE-KEYED on the measured count (the
-    * loop needed `symAll.count()` anyway), so a corpus whose pair graph
-    * IS large takes the distributed loop unchanged — same device as
-    * `Pq.searchRerank`'s maxBroadcastRows. Set 0 to force the loop.
+    * dwarfs the work. The guard is SIZE-KEYED on the graph itself (a
+    * bounded collect of at most localMax/2 + 1 undirected edges), so a
+    * corpus whose pair graph IS large takes the distributed loop
+    * unchanged — same device as `Pq.searchRerank`'s maxBroadcastRows.
+    * Set 0 to force the loop.
     */
   val LocalEdgeMaxKey = "spark.graft.components.localEdgeMax"
 
@@ -95,6 +97,32 @@ object Components {
       bCol: String,
       maxIter: Int = 30): DataFrame = {
     val e = edges.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
+      .where(col("src") =!= col("dst"))
+    // Local fast path: a graph this small pays more in per-round job
+    // overhead (checkpoint + convergence count per round, AQE re-plans)
+    // than the whole labeling costs on one core — measured 0.7-1.7 s of
+    // loop for a 256-edge pair graph at sf0.1. ONE bounded collect of the
+    // deduped undirected half (lo < hi) decides the path: the symmetric
+    // row count is exactly twice its size, so localMax/2 + 1 rows settle
+    // `nEdges <= localMax`. At or under the threshold the rows ARE the
+    // graph: labeled on the driver, returned as a LocalRelation (which
+    // downstream joins can broadcast for free). Above it the loop below
+    // recomputes the edge frame — the price of a single job on the
+    // common path; `localMax = 0` skips the probe (forced loop).
+    // Bit-identical either way (PropertySpec laws).
+    val spark = edges.sparkSession
+    val localMax = spark.conf.get(LocalEdgeMaxKey, "1000000").toLong
+    if (localMax > 0) {
+      val half = e.select(least(col("src"), col("dst")), greatest(col("src"), col("dst")))
+        .distinct().limit(math.min(localMax / 2 + 1, Int.MaxValue).toInt).collect()
+      if (2L * half.length <= localMax) {
+        val labeled = unionFind(half.map(r => (r.getLong(0), r.getLong(1))))
+        val schema = StructType(Seq(
+          StructField("id", LongType, nullable = false), StructField("comp", LongType, nullable = false)))
+        return spark.createDataFrame(
+          java.util.Arrays.asList(labeled.map { case (id, c) => Row(id, c) }: _*), schema)
+      }
+    }
     // symmetric, self-loop-free, ids-only — persisted AND materialized
     // before the loop: round 1 references it from two plan branches
     // (neighbor-min and the label join), and an unfilled cache would be
@@ -107,38 +135,9 @@ object Components {
         struct(col("src"), col("dst")),
         struct(col("dst").as("src"), col("src").as("dst")))).as("p"))
       .select(col("p.src").as("src"), col("p.dst").as("dst"))
-      .where(col("src") =!= col("dst"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nEdges = symAll.count()
-    // Local fast path (round-13 optimization): a graph this small pays
-    // more in per-round job overhead (checkpoint + convergence count per
-    // round, AQE re-plans) than the whole labeling costs on one core —
-    // measured 0.7-1.7 s of loop for a 256-edge pair graph at sf0.1.
-    // Collect the deduped undirected half (src < dst covers every sym
-    // pair once), label on the driver, return a LocalRelation (which
-    // downstream joins can broadcast for free). Guarded by the MEASURED
-    // sym count against LocalEdgeMaxKey — corpus-scale graphs take the
-    // distributed loop below, bit-identically (PropertySpec law).
-    val localMax = edges.sparkSession.conf
-      .get(LocalEdgeMaxKey, "1000000").toLong
-    if (nEdges <= localMax) {
-      val arr = symAll.where(col("src") < col("dst")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      symAll.unpersist()
-      val labeled = unionFind(arr)
-      val spark = edges.sparkSession
-      // explicit Row + schema (no implicit-encoder reflection): a plain
-      // LocalRelation that downstream joins can broadcast for free
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("comp",
-          org.apache.spark.sql.types.LongType, nullable = false)))
-      return spark.createDataFrame(
-        java.util.Arrays.asList(labeled.map(p =>
-          org.apache.spark.sql.Row(p._1, p._2)): _*), schema)
-    }
     // Size the ITERATION's parallelism to the graph, not the corpus: the
     // pair graph of a dedup run is orders of magnitude smaller than its
     // input (ids only, verified pairs only), yet inherits corpus-sized

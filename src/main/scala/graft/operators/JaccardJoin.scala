@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -18,20 +19,26 @@ import org.apache.spark.storage.StorageLevel
   *      scan-side), then 8-byte polynomial hashes for the index stages
   *      (strings only re-enter at verify);
   *   2. canonical order: global shingle-hash document-frequencies (one
-  *      agg), then each doc's hashes sorted rarest-first — the order
-  *      that makes prefixes maximally selective;
-  *   3. prefix: the first p = |S| - ceil(t*|S|) + 1 shingles per doc.
+  *      agg, built once per call), then each doc's hashes ranked
+  *      rarest-first by `row_number()` over (partition by doc, order by
+  *      (df, hash)) — the order that makes prefixes maximally selective,
+  *      no per-doc array sort;
+  *   3. prefix: the rows ranked p = |S| - ceil(t*|S|) + 1 or better.
   *      Completeness: if J(A,B) >= t then |A \ B| <= (1-t)*|A|, so A's
   *      first common shingle sits within its first (1-t)*|A|+1 <= p_A
   *      canonical positions (same for B) — the pair MUST share a prefix
   *      key (string-equal shingles always hash-equal; a hash collision
   *      can only ADD a candidate, never hide one);
-  *   4. candidates: equi-self-join of the exploded prefixes — the ONLY
-  *      candidate shuffle, O(sum of prefix sizes), never all-pairs —
-  *      pruned IN the join by PPJoin's two exact-preserving filters:
+  *   4. candidates: the prefix rows grouped by token — the ONLY
+  *      candidate shuffle, O(sum of prefix sizes), never all-pairs — and
+  *      each group's pairs streamed out by a generator
+  *      ([[graft.functions.PrefixPairs]]) that applies PPJoin's two
+  *      exact-preserving filters as it emits (a hot token holds its k
+  *      members, never a k² pair array):
   *      - LENGTH: J(A,B) >= t forces t*|A| <= |B| <= |A|/t (the
   *        intersection is at most min(|A|,|B|) and the union at least
   *        max) — integer form n_a*num <= n_b*den && n_b*num <= n_a*den;
+  *        members are scanned in size order, so it ends each scan;
   *      - POSITIONAL: a prefix token matching at canonical positions
   *        (pa, pb) bounds the overlap by 1 + min(n_a-pa, n_b-pb) (later
   *        common tokens sit strictly after it in BOTH arrays), and
@@ -50,12 +57,14 @@ import org.apache.spark.storage.StorageLevel
   *      generation (adds candidates), wrong for the reported
   *      inter/union sizes.
   *
-  * 100 TB notes: every stage is an equi-shuffle (explode/agg/join) AQE
-  * can split on skew. Rarest-first ordering pushes boilerplate
-  * (high-frequency) shingles OUT of prefixes, so hot buckets are rare by
-  * construction — the reason prefix filtering, not plain inverted-index
-  * join, is the web-dedup standard. On low-diversity corpora (tiny
-  * vocabulary ⇒ every shingle frequent) prefixes alone stop selecting;
+  * 100 TB notes: every stage is an equi-shuffle keyed on a doc id or a
+  * token; the ranking window holds one doc's set, and a prefix-token
+  * group holds its members and streams their pairs. Rarest-first
+  * ordering pushes boilerplate (high-frequency) shingles OUT of
+  * prefixes, so hot buckets are rare by construction — the reason
+  * prefix filtering, not plain inverted-index join, is the web-dedup
+  * standard. On low-diversity corpora (tiny vocabulary ⇒ every shingle
+  * frequent) prefixes alone stop selecting;
   * the length + positional filters are what keep candidate volume near
   * the true-pair count there (Xiao et al.'s PPJoin result). The shingle
   * projection is persisted (MEMORY_AND_DISK) for the run: it feeds the
@@ -125,50 +134,47 @@ object JaccardJoin {
   private[graft] def pairsFromShingles(sh: DataFrame, num: Int, den: Int): DataFrame = {
     require(num > 0 && den > 0 && num <= den, s"threshold num/den must be in (0,1], got $num/$den")
     // the index pipeline works on 8-byte shingle HASHES, not the strings:
-    // the frequency agg, per-doc re-sort and prefix self-join shuffle ~3x
+    // the frequency agg, per-doc ranking and prefix grouping shuffle ~3x
     // fewer bytes. Hash collisions are safe for COMPLETENESS — a string-
     // equal shingle always hash-matches, so every true pair still shares
     // a prefix key; a collision can only add a false candidate, and the
     // verify stage re-checks the real string sets
-    val tok = sh
-      .select(col("__id"), graft.functions.HashExprs.polyHashArray(col("__sh")).as("__hs"))
-      .select(col("__id"), explode(col("__hs")).as("__h"))
+    val tok = hashTokens(sh)
     val dfreq = tok.groupBy(col("__h")).agg(count(lit(1)).as("__df"))
-    // canonical rarest-first order ((df, hash) asc — the hash tiebreak
-    // makes the order total, hence deterministic)
-    val ordered = tok.join(dfreq, Seq("__h"))
-      .groupBy(col("__id"))
-      .agg(sort_array(collect_list(struct(col("__df"), col("__h")))).as("__ord"))
-      .select(
-        col("__id"),
-        transform(col("__ord"), x => x.getField("__h")).as("__canon"),
-        size(col("__ord")).as("__n"))
-
-    // p = n - ceil(num*n/den) + 1, all-integer: ceil(a/b) = (a+b-1) div b
-    val p = (col("__n") - floor((col("__n") * num + lit(den - 1)) / lit(den)).cast("int") + 1)
-    // posexplode: keep each prefix token's 1-based position in the FULL
-    // canonical array (the slice starts at 1, so slice index = position)
-    // plus the doc's set size — the inputs to the PPJoin filters
-    val prefix = ordered
-      .select(col("__id"), col("__n"),
-        posexplode(slice(col("__canon"), lit(1), p)).as(Seq("__p0", "__h")))
-      .select(col("__id"), col("__n"), (col("__p0") + 1).as("__pos"), col("__h"))
-    val cands = prefix
-      .select(col("__id").as("id_a"), col("__n").as("__na"), col("__pos").as("__pa"), col("__h"))
-      .join(prefix
-        .select(col("__id").as("id_b"), col("__n").as("__nb"), col("__pos").as("__pb"), col("__h")),
-        Seq("__h"))
-      .where(col("id_a") < col("id_b"))
-      // length filter: t*|A| <= |B| and t*|B| <= |A|, integer-exact
-      .where(col("__na") * num <= col("__nb") * den && col("__nb") * num <= col("__na") * den)
-      // positional filter: overlap <= 1 + min(n_a - pa, n_b - pb) at this
-      // matched token; J >= num/den needs overlap*(num+den) >= num*(n_a+n_b)
-      .where((lit(1L) + least(col("__na") - col("__pa"), col("__nb") - col("__pb")))
-        * (num + den) >= (col("__na") + col("__nb")) * num)
-      .select(col("id_a"), col("id_b"))
+    val pre = rankedPrefix(tok.join(dfreq, Seq("__h")), num, den)
+    // candidates: one group per prefix token, pairs streamed out of it
+    // with the length and positional filters applied as they are emitted
+    val cands = pre
+      .groupBy(col("__h"))
+      .agg(collect_list(struct(col("__n"), col("__pos"), col("__id"))).as("__m"))
+      .select(graft.functions.HashExprs.prefixPairs(col("__m"), num, den))
       .distinct()
 
     PairVerify.exact(cands, sh, num, den)
+  }
+
+  /** (__id, __n, __h): one row per shingle hash of each doc, __n the
+    * doc's set size.
+    */
+  private def hashTokens(sh: DataFrame): DataFrame =
+    sh.select(col("__id"), size(col("__sh")).as("__n"),
+      explode(graft.functions.HashExprs.polyHashArray(col("__sh"))).as("__h"))
+
+  /** Rarest-first prefixes of (__id, __n, __h, __df) token rows: each
+    * doc's canonical position is its row_number in (df, hash) order —
+    * the hash tiebreak makes the order total, and rows tied on both are
+    * identical, so any order among them emits the same rows — and the
+    * first p = n - ceil(num*n/den) + 1 positions are kept.
+    * Output: (__id, __n, __pos, __h), __pos 1-based.
+    */
+  private def rankedPrefix(tok: DataFrame, num: Int, den: Int): DataFrame = {
+    // ceil(a/b) = (a+b-1) div b, all-integer
+    val p = col("__n") - floor((col("__n") * num + lit(den - 1)) / lit(den)).cast("int") + 1
+    tok
+      .withColumn("__pos", row_number().over(
+        Window.partitionBy(col("__id")).orderBy(col("__df"), col("__h"))))
+      .where(col("__pos") <= p)
+      .select(col("__id"), col("__n"), col("__pos"), col("__h"))
   }
 
   /** Exact CONTAINMENT join: pairs (id_q, id_c) where at least num/den
@@ -222,31 +228,16 @@ object JaccardJoin {
     val qsh = shingled(queries, qIdCol, qTextCol) // feeds prefix build + verify
     val csh = shingled(corpus, cIdCol, cTextCol) // feeds index + verify
 
-    val ctok = csh
-      .select(col("__id"), size(col("__sh")).as("__nc"),
-        explode(graft.functions.HashExprs.polyHashArray(col("__sh"))).as("__h"))
+    val ctok = hashTokens(csh)
     val dfreq = ctok.groupBy(col("__h")).agg(count(lit(1)).as("__df"))
-    val qord = qsh
-      .select(col("__id"), explode(graft.functions.HashExprs.polyHashArray(col("__sh"))).as("__h"))
-      .join(dfreq, Seq("__h"), "left")
-      .select(col("__id"), col("__h"), coalesce(col("__df"), lit(0L)).as("__df"))
-      .groupBy(col("__id"))
-      .agg(sort_array(collect_list(struct(col("__df"), col("__h")))).as("__ord"))
-      .select(
-        col("__id"),
-        transform(col("__ord"), x => x.getField("__h")).as("__canon"),
-        size(col("__ord")).as("__n"))
-
-    // query prefix size p = n - ceil(num*n/den) + 1 (same integer form
-    // as nearDupPairs)
-    val p = (col("__n") - floor((col("__n") * num + lit(den - 1)) / lit(den)).cast("int") + 1)
-    val qpre = qord
-      .select(col("__id").as("id_q"), col("__n").as("__nq"),
-        posexplode(slice(col("__canon"), lit(1), p)).as(Seq("__p0", "__h")))
-      .select(col("id_q"), col("__nq"), (col("__p0") + 1).as("__pq"), col("__h"))
+    val qpre = rankedPrefix(
+      hashTokens(qsh).join(dfreq, Seq("__h"), "left")
+        .select(col("__id"), col("__n"), col("__h"), coalesce(col("__df"), lit(0L)).as("__df")),
+      num, den)
 
     val cands = qpre
-      .join(ctok.select(col("__id").as("id_c"), col("__nc"), col("__h")), Seq("__h"))
+      .select(col("__id").as("id_q"), col("__n").as("__nq"), col("__pos").as("__pq"), col("__h"))
+      .join(ctok.select(col("__id").as("id_c"), col("__n").as("__nc"), col("__h")), Seq("__h"))
       .where(col("__nc") * den >= col("__nq") * num)
       .where((col("__nq") - col("__pq") + lit(1)) * den >= col("__nq") * num)
       .select(col("id_q"), col("id_c"))

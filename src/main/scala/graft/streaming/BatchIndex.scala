@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 /** Idempotent per-micro-batch index layout shared by the incremental
@@ -391,10 +392,15 @@ private[graft] object BatchIndex {
     val dirs = batchDirIds(spark, indexPath)
       .filter(id => id < beforeBatch && bound.forall(id > _))
       .map(id => s"$indexPath/batch=$id")
+    // the batch dirs are read as partitions of ONE table rooted at the
+    // index path: without a basePath, several `batch=N` dirs that are
+    // themselves partitioned (the band tree's `__bp=`) are inferred as
+    // conflicting roots. The inferred `batch` column is projected away.
     val parts =
       runs.map(r => spark.read.schema(template.schema).parquet(r.dir)) ++
       (if (dirs.nonEmpty)
-        Seq(spark.read.schema(template.schema).parquet(dirs: _*)) else Nil)
+        Seq(spark.read.schema(template.schema).option("basePath", indexPath).parquet(dirs: _*)
+          .select(template.columns.map(col): _*)) else Nil)
     if (parts.isEmpty)
       spark.createDataFrame(new java.util.ArrayList[Row](), template.schema)
     else parts.reduce(_ unionByName _)

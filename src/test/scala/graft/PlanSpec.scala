@@ -312,6 +312,29 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("PPJoin executed plan builds the prefix index once: one frequency agg, no per-doc collect_list") {
+    // the AQE final plan of nearDupPairs: exactly ONE final count
+    // aggregation keyed on the shingle hash (the document-frequency
+    // table), and the canonical order is a window rank, not a
+    // collect_list of (df, hash) structs per doc
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{CollectList, Count, Final}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    val docs = Seq((1L, "a b c d e f g"), (2L, "a b c d e f h"), (3L, "x y z a b c d"))
+      .toDF("doc_id", "text")
+    val df = JaccardJoin.nearDupPairs(docs, "doc_id", "text", num = 6, den = 10)
+    assert(df.collect().length === 1)
+    val aggs = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) { case a: BaseAggregateExec => a }
+    val dfAggs = aggs.filter(a => a.groupingExpressions.map(_.name) == Seq("__h") &&
+      a.aggregateExpressions.exists(e => e.mode == Final && e.aggregateFunction.isInstanceOf[Count]))
+    assert(dfAggs.size === 1, aggs.mkString("\n"))
+    val perDocSorts = aggs.filter(_.aggregateExpressions.exists(e =>
+      e.aggregateFunction.isInstanceOf[CollectList] &&
+        e.aggregateFunction.references.exists(_.name == "__df")))
+    assert(perDocSorts.isEmpty, perDocSorts.mkString("\n"))
+    spark.catalog.clearCache()
+  }
+
   test("q136 amortized dedup report: derived plan reads the persisted index, never re-shingles") {
     // the build-once/query-many pin: the index WRITE (the one
     // scan+shingle pass) happens before the returned plan; the returned

@@ -128,6 +128,47 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("law: JaccardJoin == brute force with a planted polyHash collision") {
+    // seeded birthday search for two DISTINCT 3-gram strings with equal
+    // polyHash (mod 1e9+7: ~40k draws). Planted together they share an
+    // index key without sharing a shingle — a collision may only ADD a
+    // candidate, which verify drops — and a doc holding both carries two
+    // identical (df, hash) rows, the tie case of the canonical ranking
+    def hash(s: String): Long = functions.HashRuntime.polyHashArray(
+      new org.apache.spark.sql.catalyst.util.GenericArrayData(
+        Array[Any](org.apache.spark.unsafe.types.UTF8String.fromString(s)))).getLong(0)
+    val rnd = new scala.util.Random(7)
+    def word() = (1 to 4).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString
+    val seen = scala.collection.mutable.LongMap.empty[String]
+    var pair: (String, String) = null
+    while (pair == null) {
+      val g = Seq(word(), word(), word()).mkString(" ")
+      seen.get(hash(g)) match {
+        case Some(o) if o != g => pair = (o, g)
+        case _ => seen(hash(g)) = g
+      }
+    }
+    val (g1, g2) = pair
+    assert(g1 != g2 && hash(g1) == hash(g2))
+    val texts = Seq(s"$g1 q r", s"$g2 q r", s"$g1 $g2", s"$g2 $g1", s"$g1 q r s",
+      s"$g1 $g2", s"q r $g1 $g2", s"$g2 q r s")
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+    def sh(t: String): Set[String] = t.split(" ").sliding(3).map(_.mkString(" ")).toSet
+    for (num <- Seq(2, 4, 5, 6, 8, 10)) {
+      val got = JaccardJoin.nearDupPairs(docs.toDF("doc_id", "text"), "doc_id", "text",
+          num = num, den = 10)
+        .select("id_a", "id_b", "inter_size", "union_size")
+        .as[(Long, Long, Long, Long)].collect().toSet
+      val want = (for {
+        (ia, ta) <- docs; (ib, tb) <- docs if ia < ib
+        inter = (sh(ta) & sh(tb)).size.toLong
+        union = (sh(ta) | sh(tb)).size.toLong
+        if inter * 10 >= union * num
+      } yield (ia, ib, inter, union)).toSet
+      assert(got === want, s"num=$num/10 grams=($g1 | $g2)")
+    }
+  }
+
   test("law: connectedComponents == driver union-find on random graphs") {
     val edgeGen: Gen[List[(Long, Long)]] =
       Gen.listOfN(60, for {
@@ -198,6 +239,28 @@ class PropertySpec extends SparkSpec {
     val got = Components.connectedComponents(empty, "a", "b")
     assert(got.columns.toSeq === Seq("id", "comp"))
     assert(got.count() === 0)
+  }
+
+  test("law: connectedComponents switches local/loop exactly at localEdgeMax") {
+    // the driver path must be taken at nEdges == localEdgeMax and the
+    // loop at nEdges == localEdgeMax + 1 (nEdges = symmetric,
+    // self-loop-free, deduped rows), both equal to union-find
+    val rnd = new scala.util.Random(11)
+    // plus a self-loop and a reversed duplicate, which must not count
+    val edges = List.fill(40)((rnd.nextInt(30).toLong, rnd.nextInt(30).toLong)) ++
+      List((5L, 5L), (3L, 4L), (4L, 3L))
+    val und = edges.collect { case (a, b) if a != b => (math.min(a, b), math.max(a, b)) }.distinct
+    val nEdges = 2 * und.size
+    val want = Components.unionFind(und.toArray).toMap
+    def isLocal(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+    for ((localMax, local) <- Seq((nEdges, true), (nEdges - 1, false))) {
+      graft.Engine.withConfs(spark, Components.LocalEdgeMaxKey -> localMax.toString) {
+        val got = Components.connectedComponents(edges.toDF("a", "b"), "a", "b")
+        assert(isLocal(got) === local, s"localEdgeMax=$localMax nEdges=$nEdges")
+        assert(got.as[(Long, Long)].collect().toMap === want, s"localEdgeMax=$localMax")
+      }
+    }
   }
 
   test("law: RangeJoin.pointInInterval == brute force, exactly once (incl. negatives)") {

@@ -1558,6 +1558,38 @@ class StreamingSpec extends SparkSpec {
       .collect().map(_.toSeq).toSet === expected)
   }
 
+  test("CurationGate: compactEvery > 1 reads several uncompacted batch dirs — verdicts unchanged") {
+    // compactEvery=3: batch 2 is the first to dedup against TWO live
+    // batch dirs (0 and 1) of both trees — the band tree's dirs are
+    // themselves __bp-partitioned, which a single multi-path read
+    // rejected with CONFLICTING_DIRECTORY_STRUCTURES. Batch 2 must still
+    // drop the near-dup of batch 0's survivor.
+    implicit val sqlCtx = spark.sqlContext
+    val lm = graft.streaming.CurationGate.staticLm(curationTrusted, "text")
+    val root = java.nio.file.Files.createTempDirectory("graft_cgate_every3").toString
+    val input = MemoryStream[(Long, String, String)]
+    val accepted = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val q = graft.streaming.CurationGate.run(
+        input.toDS().toDF("doc_id", "source", "text"),
+        "doc_id", "text", "source", lm, s"$root/index", s"$root/manifest",
+        compactEvery = Some(3)) { (survivors, _) =>
+        accepted.synchronized {
+          accepted ++= survivors.select("doc_id").as[Long].collect(); ()
+        }
+      }
+      .option("checkpointLocation", s"$root/ckpt")
+      .trigger(Trigger.ProcessingTime(0L)).start()
+    try {
+      input.addData((1L, "a", curW30), (2L, "a", curW31), (3L, "b", curU30))
+      q.processAllAvailable() // batch 0: keep-longest keeps 2; 3 distinct
+      input.addData((12L, "a", curFresh))
+      q.processAllAvailable() // batch 1: no compaction yet
+      input.addData((10L, "a", curW30var))
+      q.processAllAvailable() // batch 2: near-dup of 2 (live batch=0) — drops
+    } finally q.stop()
+    assert(accepted.synchronized(accepted.toSet) === Set(2L, 3L, 12L))
+  }
+
   test("StreamingIvf: rebuild re-trains the quantizer — imbalance drops, queries match the one-shot build bit-for-bit") {
     // the remediation for the pathology q165 detects: the bootstrap
     // quantizer was trained before a hot near-collinear cluster arrived,
